@@ -139,13 +139,12 @@ object ChangeFeed {
         // replica catching up through one table-sized delta should take
         // the async-stats full-rewrite path, not pay the prune path's
         // blocking stats barrier over every bucket (round-4 review #5)
-        val hint = batch.queryExecution.optimizedPlan.stats.sizeInBytes
         // retrying: replica-side maintenance (compact/rebucket) racing a
         // poll's apply must cost the loser a re-run, not fail the feed
         val stats = Merge.applyBatchRetrying(spark, replica, batch,
           epoch = to.toLong,
           batchSchemaVersion = source.snapshot(to).schemaId,
-          batchBytesHint = Some(hint.min(BigInt(Long.MaxValue)).toLong),
+          batchBytesHint = Some(Merge.bytesHint(batch)),
           gateKey = gateKey,
           truncate = from == -1)
         if (stats.applied) Metrics.append(replicaDir, stats)

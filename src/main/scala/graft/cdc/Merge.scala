@@ -122,8 +122,8 @@ object Merge {
   /** Winner-semi-join strategy: broadcast iff the winner-key count is
     * known to fit the driver (`graft.merge.broadcastWinnersMaxKeys`,
     * default 10^7 ≈ 80 MB of LSNs). Counts are already on hand on the
-    * paths that matter — the prune path's blocking stats agg and the
-    * prefetch's materialized key-plan count — so an over-sized
+    * paths that matter — the prune path's blocking stats agg and
+    * [[Prefetch]]'s estimate from the last applied batch — so an over-sized
     * micro-batch degrades to a shuffled semi-join instead of OOMing the
     * driver, with no conf intervention. The async-stats full-rewrite
     * path has NO key count without a blocking job (that barrier is the
@@ -140,6 +140,13 @@ object Merge {
           .map(_.toLong).getOrElse(10000000L)
         nKeys.forall(_ <= maxKeys)
       }
+
+  /** Catalyst's size estimate of a batch in bytes, for `batchBytesHint`:
+    * it lets the merge pick prune vs full-rewrite without running a job.
+    */
+  def bytesHint(batch: DataFrame): Long =
+    batch.queryExecution.optimizedPlan.stats.sizeInBytes
+      .min(BigInt(Long.MaxValue)).toLong
 
   def applyBatch(spark: SparkSession, table: LakeTable, rawBatch: DataFrame,
       epoch: Long, batchSchemaVersion: Int,

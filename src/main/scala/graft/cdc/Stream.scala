@@ -130,25 +130,21 @@ object CdcStream {
       .parquet(logDir)
 
     // ---- speculative next-batch prefetch (round-6, r5 verdict #3) ----
-    // The replay driver overlaps batch k+1's table-independent passes
-    // (narrow key argmax + full-payload winners scan — the dominant
-    // per-batch cost) with batch k's resolve+write; the streaming tail
-    // could not, because Spark owns batching — measured at 8 cores the
-    // tail ran ~1.0M events/s vs replay's ~1.7M on the same log, with
-    // ~97% of tail wall inside applyBatch (the fixed per-trigger cost is
-    // NOT the gap; the un-overlapped winners scan is). But the next
-    // trigger's file set is PREDICTABLE: the file source takes the
-    // oldest `maxFilesPerTrigger` not-yet-processed files (latestFirst =
-    // false). So after each batch we list the log, predict the next file
-    // set, and prepare keys+winners in the background — exactly the
-    // replay pipeline. SAFETY: the prepared plans are handed to the
-    // merge ONLY when the actual batch's `inputFiles` equals the
-    // predicted set exactly; a mispredicted prefetch (files landing out
-    // of modification-time order, a rival consumer) is discarded, never
-    // applied. A wrong prediction costs one wasted background scan; it
-    // can never change what the merge computes.
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
+    // The replay driver overlaps batch k+1's table-independent passes with
+    // batch k's resolve+write ([[Prefetch]]); the streaming tail could
+    // not, because Spark owns batching — measured at 8 cores the tail ran
+    // ~1.0M events/s vs replay's ~1.7M on the same log, with ~97% of tail
+    // wall inside applyBatch (the un-overlapped winners scan is the gap).
+    // But the next trigger's file set is PREDICTABLE: the file source
+    // takes the oldest `maxFilesPerTrigger` not-yet-processed files
+    // (latestFirst = false). So after each batch we list the log, predict
+    // the next file set, and prepare it. SAFETY: the prepared plans are
+    // handed to the merge ONLY when the actual batch's file set equals
+    // the predicted set exactly; a mispredicted prefetch (files landing
+    // out of modification-time order, a rival consumer) is discarded,
+    // never applied. A wrong prediction costs one wasted background scan
+    // (counted in Prefetch.misses); it can never change what the merge
+    // computes.
     val hconf = spark.sparkContext.hadoopConfiguration
     def norm(p: String): String =
       new org.apache.hadoop.fs.Path(p).toUri.getPath
@@ -193,69 +189,45 @@ object CdcStream {
         else new org.apache.hadoop.fs.Path(srcLogDir, s"$batchId.compact")
       logEntries(p).filter(_._2 == batchId).map(e => norm(e._1)).toSet
     }
+    val prefetch = new Prefetch(spark)
     val seen = scala.collection.mutable.HashSet[String]()
     var seenInit = false
-    var predicted: Option[(Set[String], Future[_], (DataFrame, DataFrame))] =
-      None
-    var lastObs: Option[(Long, Long)] = None // (keys, bytes) of last applied
-    def dropPrediction(): Unit = {
-      predicted.foreach { case (_, _, (pk, win)) =>
-        pk.unpersist(); win.unpersist()
-      }
-      predicted = None
-    }
-    def prefetchNext(): Unit = {
-      // the source's order: oldest modification time first, path as the
-      // deterministic tiebreak. The equality gate above makes a mismatch
-      // with Spark's exact internal ordering harmless.
+    // the source's order: oldest modification time first, path as the
+    // deterministic tiebreak. The exact-match gate makes a mismatch with
+    // Spark's internal ordering harmless.
+    def predictNext(): Option[(Set[String], Prefetch.Prepared)] = {
       val next = listLogFiles().filterNot(f => seen.contains(norm(f._1)))
         .sortBy { case (p, t) => (t, p) }
-        .take(maxFilesPerTrigger)
-      if (next.isEmpty) return
-      val paths = next.map(_._1)
-      val nextBatch = spark.read.schema(eventSchema).parquet(paths: _*)
-      val pk = Merge.prepareKeys(nextBatch).persist()
-      val bytes = {
-        val fs = new org.apache.hadoop.fs.Path(paths.head).getFileSystem(hconf)
-        paths.map(p => fs.getFileStatus(
-          new org.apache.hadoop.fs.Path(p)).getLen).sum
+        .take(maxFilesPerTrigger).map(_._1)
+      if (next.isEmpty) None
+      else {
+        val fs = new org.apache.hadoop.fs.Path(next.head).getFileSystem(hconf)
+        val bytes = next.map(p =>
+          fs.getFileStatus(new org.apache.hadoop.fs.Path(p)).getLen).sum
+        Some((next.map(norm).toSet, prefetch.prepare(
+          spark.read.schema(eventSchema).parquet(next: _*), bytes)))
       }
-      val keyEstimate = lastObs.collect { case (k, b) if b > 0 =>
-        math.ceil(k.toDouble * bytes / b).toLong
-      }
-      val win = Merge.prepareWinners(nextBatch, pk, keyEstimate).persist()
-      val fut = Future {
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "prefetch")
-        try { pk.count(); win.count() }
-        finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-      }
-      fut.failed.foreach { e =>
-        System.err.println("[graft] tail prefetch failed " +
-          s"(${e.getClass.getSimpleName}: ${e.getMessage}) — next batch " +
-          "will recompute on the critical path")
-        pk.unpersist(); win.unpersist()
-      }
-      predicted = Some((paths.map(norm).toSet, fut, (pk, win)))
     }
 
+    // prefetch batch 0 BEFORE the stream starts (round-6): the first
+    // trigger otherwise pays the un-overlapped key+winners scans ON TOP
+    // of Spark's stream-start planning (measured: first tail batch ~3x
+    // steady state). Only on a fresh checkpoint: there the oldest-files
+    // prediction is exactly batch 0's file set, while a RESUMED one
+    // (sources/0 exists) recovers `seen` only inside its first batch, so
+    // the prediction would be a wasted scan.
+    var predicted =
+      if (srcLogDir.getFileSystem(hconf).exists(srcLogDir)) None
+      else predictNext()
     // progress listener registered BEFORE start and bound by query name in
     // onQueryStarted (delivered synchronously with start()): registering
     // after start raced a fast first AvailableNow micro-batch, silently
     // dropping its progress line (round-2 advice)
-    // prefetch batch 0 BEFORE the stream starts (round-6): the first
-    // trigger otherwise pays the un-overlapped key+winners scans ON TOP
-    // of Spark's stream-start planning (measured: first tail batch ~3x
-    // steady state). On a fresh checkpoint the oldest-files prediction
-    // is exactly batch 0's file set; on a RESUMED checkpoint `seen` is
-    // still empty here (it recovers inside the first foreachBatch), so
-    // the prediction is wrong and the exact file-set handover gate
-    // discards it — one wasted background scan, never a misapply.
-    prefetchNext()
     val queryName = s"graft-tail-${java.util.UUID.randomUUID().toString.take(8)}"
     val remove = attachProgressSink(spark, queryName, tableDir,
       // a prediction left over when the query ends (stop mid-drain, a
       // ProcessingTime follower shut down) must release its cached blocks
-      onTerminated = () => dropPrediction())
+      onTerminated = () => predicted.foreach(_._2.release()))
     try {
       events.writeStream
         .queryName(queryName)
@@ -271,40 +243,21 @@ object CdcStream {
             }
           }
           val files = filesOfBatch(batchId)
-          // hand the prepared plans over ONLY on an exact file-set match
-          // (and never from a prefetch that already failed — applyBatch
-          // would skip its own persist and re-run the scans per consumer)
-          val pk = predicted.collect {
-            case (pf, f, pair) if pf == files && !f.value.exists(_.isFailure) =>
-              pair
-          }
-          if (pk.isEmpty && predicted.nonEmpty) {
-            System.err.println(s"[graft] tail prefetch mispredicted batch " +
-              s"$batchId's file set — discarding (correctness unaffected)")
-            if (sys.env.contains("GRAFT_TAIL_DEBUG")) predicted.foreach {
-              case (pf, _, _) =>
-                System.err.println(s"[graft]   predicted-only: " +
-                  s"${(pf -- files).take(3)}\n[graft]   actual-only: " +
-                  s"${(files -- pf).take(3)} (pred=${pf.size} act=${files.size})")
-            }
-          }
-          if (pk.isEmpty) dropPrediction() // mispredicted: release, recompute
-          predicted = None // consumed either way; applyBatch unpersists
-          // launch batch k+1's prefetch BEFORE applying batch k — the
-          // replay pipeline's shape: the background scans (FAIR pool)
-          // overlap this batch's resolve+write, not the next batch's own
-          // critical path
+          // launch batch k+1's prefetch BEFORE applying batch k, so its
+          // background scans overlap this batch's resolve+write
           seen ++= files
-          if (files.nonEmpty) prefetchNext()
-          // Catalyst's size estimate lets the merge pick prune vs
-          // full-rewrite without running a job
-          val hint = batch.queryExecution.optimizedPlan.stats.sizeInBytes
+          val current = predicted
+          predicted = if (files.nonEmpty) predictNext() else None
+          val plans = current.flatMap { case (predictedFiles, p) =>
+            if (predictedFiles == files) p.take() else { p.discard(); None }
+          }
+          val hint = Merge.bytesHint(batch)
           // retrying: an offline compact/rebucket racing the resident
           // tail must cost the loser a re-run, not fail the stream
           val stats = Merge.applyBatchRetrying(batch.sparkSession, table, batch,
             epoch = batchId, batchSchemaVersion = schemaVersion,
-            batchBytesHint = Some(hint.min(BigInt(Long.MaxValue)).toLong),
-            preparedKeys = pk.map(_._1), preparedWinners = pk.map(_._2),
+            batchBytesHint = Some(hint),
+            preparedKeys = plans.map(_._1), preparedWinners = plans.map(_._2),
             quarantineDir = quarantineDir,
             // production tail emits the north star's per-partition lineage
             partitionLineage = true,
@@ -313,13 +266,13 @@ object CdcStream {
             // a tail on a different checkpoint — cannot swallow a batch
             gateKey = gateKeyFor(checkpointDir))
           if (stats.applied) Metrics.append(tableDir, stats)
-          if (stats.applied)
-            lastObs = Some((stats.eventsIn - stats.conflicts,
-              math.max(1L, hint.min(BigInt(Long.MaxValue)).toLong)))
+          prefetch.observe(stats, hint)
           ()
         }
         .start()
-    } catch { case e: Throwable => remove(); dropPrediction(); throw e }
+    } catch { case e: Throwable =>
+      remove(); predicted.foreach(_._2.release()); throw e
+    }
   }
 
   /** Pipe the named query's StreamingQueryProgress lines to the table's
@@ -392,76 +345,19 @@ object CdcStream {
         }
       }.toSeq.sortBy(_._1).take(maxChunks)
       .filter(_._1 > committed)
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
-    def readChunk(v: Int, path: String) =
+    // pipelined micro-batches through the shared [[Prefetch]]: chunk
+    // k+1's key and winners scans run in the background while chunk k
+    // resolves and writes; chunk 0 applies unprepared
+    Prefetch.inOrder(spark, chunks) { case (_, v, path) =>
       // explicit per-version schema: no per-batch footer inference on the
       // driver (a serial cost on every micro-batch)
-      spark.read.schema(chunkSchema(v)).parquet(path)
-    // pipelined micro-batches: batch k+1's table-independent passes — the
-    // narrow key argmax AND the full-payload winners scan (the dominant
-    // per-batch cost) — run in the background while batch k resolves and
-    // writes, without breaking the sequential snapshot chain. They run in
-    // a separate FAIR pool (when spark.scheduler.mode=FAIR) so the big
-    // prefetch scan cannot starve batch k's critical-path tasks.
-    //
-    // The winners join sizes itself from the most recently APPLIED
-    // batch's observed key count (eventsIn - conflicts from its
-    // MergeStats), SCALED by the byte-size ratio of the upcoming chunk to
-    // that batch's chunk — so a sudden much-larger chunk degrades to the
-    // shuffled join instead of blowing the broadcast, closing the
-    // staleness gap of a raw lagged count (round-4 review #2). The
-    // estimator costs NO barrier — an A/B measured building the winners
-    // plan behind the key-plan count (an Await at the consume site) at
-    // -11% total-wall at 32 cores, because batch k+1 then could not
-    // start until the whole prefetch completed instead of overlapping
-    // with it. Chunks 0 (unprepared) and 1 (no observation yet) keep the
-    // broadcast default — the same cold-bootstrap contract as the
-    // unprepared full-rewrite path, bounded by chunk sizing.
-    var prepared: Option[(Future[_], (DataFrame, DataFrame))] = None
-    var lastObs: Option[(Long, Long)] = None // (keys, chunkBytes) of last applied
-    chunks.zipWithIndex.map { case ((i, v, path), idx) =>
-      val batch = readChunk(v, path)
-      // a prefetch that has ALREADY failed must not hand over its
-      // (unpersisted) plans — applyBatch would then skip its own
-      // persist() and re-run the narrow key scan once per consumer
-      // (round-4 review #4). An in-flight prefetch hands over normally:
-      // persist() dedups the concurrent materialization, and a late
-      // failure's unpersist only costs recompute.
-      val pk = prepared.collect {
-        case (f, pair) if !f.value.exists(_.isFailure) => pair
-      }
-      prepared = chunks.lift(idx + 1).map { case (_, nv, np) =>
-        val nextBatch = readChunk(nv, np)
-        val nextPk = Merge.prepareKeys(nextBatch).persist()
-        val keyEstimate = lastObs.collect { case (k, b) if b > 0 =>
-          math.ceil(k.toDouble * pathBytes(np) / b).toLong
-        }
-        val nextWin = Merge.prepareWinners(nextBatch, nextPk, keyEstimate).persist()
-        val fut = Future { // materialize both caches in the background
-          spark.sparkContext.setLocalProperty("spark.scheduler.pool", "prefetch")
-          try { nextPk.count(); nextWin.count() }
-          finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-        }
-        // a swallowed prefetch failure would silently degrade to
-        // unpipelined execution (or resurface confusingly on the critical
-        // path) — surface it, and drop the caches so the critical-path
-        // recompute starts clean (round-1 advice)
-        fut.failed.foreach { e =>
-          System.err.println(
-            s"[graft] prefetch for chunk ${i + 1} failed (${e.getClass.getSimpleName}: " +
-              s"${e.getMessage}) — batch will recompute on the critical path")
-          nextPk.unpersist(); nextWin.unpersist()
-        }
-        (fut, (nextPk, nextWin))
-      }
-      val stats = Merge.applyBatchRetrying(spark, table, batch, epoch = i.toLong,
-        batchSchemaVersion = v, batchBytesHint = Some(pathBytes(path)),
-        preparedKeys = pk.map(_._1), preparedWinners = pk.map(_._2),
+      (spark.read.schema(chunkSchema(v)).parquet(path), pathBytes(path))
+    } { case ((i, v, _), b) =>
+      val stats = Merge.applyBatchRetrying(spark, table, b.df, epoch = i.toLong,
+        batchSchemaVersion = v, batchBytesHint = Some(b.bytes),
+        preparedKeys = b.keys, preparedWinners = b.winners,
         gateKey = StreamGateKey)
       if (stats.applied) Metrics.append(tableDir, stats)
-      if (stats.applied)
-        lastObs = Some((stats.eventsIn - stats.conflicts, pathBytes(path)))
       stats
     }
   }
@@ -482,6 +378,163 @@ object CdcStream {
         StructField("op", StringType, nullable = false)) ++
         data.fields ++
         Seq(StructField("schema_version", IntegerType, nullable = false)))
+  }
+}
+
+/** The one prefetch pipeline of every batch driver ([[CdcStream.tail]],
+  * [[CdcStream.replayChunks]], the CDC queries). A batch's two
+  * table-independent merge passes — the narrow key argmax
+  * ([[Merge.prepareKeys]]) and the full-payload winners scan
+  * ([[Merge.prepareWinners]], the dominant per-batch cost) — are built,
+  * persisted and materialized in the background, in the `prefetch` FAIR
+  * pool (when spark.scheduler.mode=FAIR) so they cannot starve the
+  * critical path, while the previous batch resolves and writes. Drivers
+  * look ahead one batch, so at most two prepared pairs are cached at any
+  * time: the batch being applied and the next one.
+  *
+  * Prefetch is a speed-up that can always be thrown away: a prepared pair
+  * is handed to [[Merge.applyBatch]] at most once, and the merge then owns
+  * (and unpersists) it. A pair whose background pass already failed, or
+  * that the driver never hands over, is released here instead — its jobs
+  * cancelled, its caches dropped — and the merge recomputes on the
+  * critical path.
+  *
+  * The winners join sizes itself from the most recently APPLIED batch's
+  * key count (eventsIn - conflicts), scaled by the byte ratio of the
+  * upcoming batch to that one, so a sudden much larger batch degrades to
+  * the shuffled join instead of blowing the broadcast. The estimate costs
+  * no barrier: an A/B measured building the winners plan behind the
+  * key-plan count at -11% total wall at 32 cores, because the next batch
+  * then could not start until the whole prefetch completed. Until one
+  * batch has applied there is no estimate and the join keeps the
+  * broadcast default — the same cold-start contract as the unprepared
+  * full-rewrite path, bounded by batch sizing.
+  */
+final class Prefetch(spark: SparkSession) {
+  private var last: Option[(Long, Long)] = None // (keys, bytes) last applied
+
+  /** Feeds an applied batch of `bytes` into the next estimate. */
+  def observe(stats: MergeStats, bytes: Long): Unit =
+    if (stats.applied)
+      last = Some((stats.eventsIn - stats.conflicts, math.max(1L, bytes)))
+
+  /** Persists `batch`'s key and winners plans and starts materializing
+    * them. `bytes` is in the unit [[observe]] is fed.
+    */
+  def prepare(batch: DataFrame, bytes: Long): Prefetch.Prepared = {
+    val keys = Merge.prepareKeys(batch).persist()
+    val nKeys = last.map { case (k, b) => math.ceil(k.toDouble * bytes / b).toLong }
+    new Prefetch.Prepared(spark, keys,
+      Merge.prepareWinners(batch, keys, nKeys).persist())
+  }
+}
+
+object Prefetch {
+  import scala.concurrent.Future
+  import scala.concurrent.ExecutionContext.Implicits.global
+
+  /** Handover outcomes in this JVM: plans handed to the merge, plans
+    * discarded because the batch was not the predicted one (the tail),
+    * and plans dropped because their background pass had failed.
+    */
+  val hits, misses, failed = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** One batch as a driver applies it: the prepared plans are empty for
+    * a batch that was not prepared (or whose prefetch failed).
+    */
+  final case class Batch(df: DataFrame, bytes: Long,
+      keys: Option[DataFrame], winners: Option[DataFrame])
+
+  final class Prepared private[Prefetch] (spark: SparkSession,
+      keys: DataFrame, winners: DataFrame) {
+    // set by whoever disposes of the plans first: the handover, a
+    // release, or the background failure
+    private val claimed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    @volatile private var dropped = false
+    private val tag = s"graft-prefetch-${java.util.UUID.randomUUID()}"
+    private val done = Future {
+      val sc = spark.sparkContext
+      sc.setLocalProperty("spark.scheduler.pool", "prefetch")
+      sc.addJobTag(tag)
+      try {
+        if (!dropped) keys.count()
+        if (!dropped) winners.count()
+      } finally {
+        sc.removeJobTag(tag)
+        sc.setLocalProperty("spark.scheduler.pool", null)
+      }
+    }
+    done.failed.foreach { e =>
+      if (claimed.compareAndSet(false, true)) {
+        System.err.println(s"[graft] prefetch failed (${e.getClass.getSimpleName}: " +
+          s"${e.getMessage}) — the batch will recompute on the critical path")
+        drop()
+      }
+    }
+
+    private def drop(): Unit = {
+      dropped = true
+      spark.sparkContext.cancelJobsWithTag(tag)
+      keys.unpersist(); winners.unpersist()
+    }
+
+    /** The plans for [[Merge.applyBatch]], which then owns them; None if
+      * the background pass failed. At most once.
+      */
+    def take(): Option[(DataFrame, DataFrame)] = {
+      val mine = claimed.compareAndSet(false, true)
+      if (mine && !done.value.exists(_.isFailure)) {
+        hits.incrementAndGet()
+        Some((keys, winners))
+      } else {
+        if (mine) drop()
+        failed.incrementAndGet()
+        None
+      }
+    }
+
+    /** Drops the plans: the batch turned out not to be the predicted one. */
+    def discard(): Unit = {
+      misses.incrementAndGet()
+      release()
+    }
+
+    /** Drops the plans unless they were handed over. */
+    def release(): Unit = if (claimed.compareAndSet(false, true)) drop()
+  }
+
+  /** Applies `items` in order, looking ahead one batch: batch k+1 is read
+    * and prepared just before batch k applies, so its scans overlap batch
+    * k's resolve+write. Batch 0 applies unprepared. `read` gives an item's
+    * batch and its size in bytes. Plans not yet handed over when `read` or
+    * `apply` throws are released.
+    */
+  def inOrder[A](spark: SparkSession, items: Seq[A])(
+      read: A => (DataFrame, Long))(apply: (A, Batch) => MergeStats)
+      : Seq[MergeStats] = {
+    val xs = items.toIndexedSeq
+    val prefetch = new Prefetch(spark)
+    var ahead: Option[(DataFrame, Long, Prepared)] = None
+    try xs.indices.map { k =>
+      // prepare the next batch first: if reading or preparing it throws,
+      // `ahead` still holds this batch's plans for the release below
+      val current = ahead
+      ahead = xs.lift(k + 1).map { next =>
+        val (df, bytes) = read(next)
+        (df, bytes, prefetch.prepare(df, bytes))
+      }
+      val b = current match {
+        case Some((df, bytes, p)) =>
+          val plans = p.take()
+          Batch(df, bytes, plans.map(_._1), plans.map(_._2))
+        case None =>
+          val (df, bytes) = read(xs(k))
+          Batch(df, bytes, None, None)
+      }
+      val stats = apply(xs(k), b)
+      prefetch.observe(stats, b.bytes)
+      stats
+    } finally ahead.foreach(_._3.release())
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.cdc.Merge
+import graft.cdc.{Merge, Prefetch}
 import graft.lake.LakeTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -47,38 +47,30 @@ object CdcQueries {
 
   private def freshMergeEventsDir: String = fresh(mergeEventsDir)
 
-  /** Pipelined table-independent prep — the replay/tail drivers' shape
-    * (guide §2.6, overlap independent jobs): the per-epoch key argmax and
-    * winners semi-join never read the table, so kick off their
-    * materialization for EVERY epoch up front and let epoch k+1's narrow
-    * scans overlap epoch k's resolve+write instead of serializing behind
-    * it. Handover follows the replay contract exactly: an in-flight
-    * prefetch hands over normally (persist() dedups the concurrent
-    * materialization); one that already FAILED is dropped so applyBatch
-    * recomputes on the critical path. applyBatch unpersists handed-over
-    * plans itself; semantics are unchanged (preparedKeys/preparedWinners
-    * are the same inputs the streaming drivers pass).
+  /** Merges `batches` as epochs 0, 1, … through the batch drivers' shared
+    * [[Prefetch]] pipeline (guide §2.6, overlap independent jobs): epoch
+    * k+1's key argmax and winners semi-join never read the table, so they
+    * materialize in the background while epoch k resolves and writes.
+    * Epoch 0 applies unprepared; the first prepared epoch has no applied
+    * batch to estimate its key count from and keeps the broadcast winners
+    * join, the cold-start contract of the unprepared full-rewrite path.
+    * `hinted` passes Catalyst's size estimate as the merge's size hint, so
+    * a table-sized epoch takes the full-rewrite path; without it the prune
+    * path runs (and merge-on-read engages). `after` runs after each merge.
     */
-  private def prepareAhead(batches: Seq[DataFrame])
-      : Seq[(DataFrame, DataFrame, scala.concurrent.Future[_])] = {
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
-    batches.map { b =>
-      val pk = Merge.prepareKeys(b).persist()
-      val win = Merge.prepareWinners(b, pk).persist()
-      val fut = Future { pk.count(); win.count() }
-      fut.failed.foreach { _ => pk.unpersist(); win.unpersist() }
-      (pk, win, fut)
+  private def mergeEpochs(s: SparkSession, t: LakeTable,
+      batches: Seq[DataFrame], hinted: Boolean,
+      after: Int => Unit = _ => ()): Unit =
+    Prefetch.inOrder(s, batches.zipWithIndex) { case (b, _) =>
+      (b, Merge.bytesHint(b))
+    } { case ((_, epoch), b) =>
+      val stats = Merge.applyBatch(s, t, b.df, epoch.toLong,
+        batchSchemaVersion = 3,
+        batchBytesHint = if (hinted) Some(b.bytes) else None,
+        preparedKeys = b.keys, preparedWinners = b.winners)
+      after(epoch)
+      stats
     }
-  }
-
-  /** Prepared-plan pair for applyBatch, or (None, None) if its prefetch
-    * already failed (the replay drivers' gate).
-    */
-  private def handover(p: (DataFrame, DataFrame, scala.concurrent.Future[_]))
-      : (Option[DataFrame], Option[DataFrame]) =
-    if (p._3.value.exists(_.isFailure)) (None, None)
-    else (Some(p._1), Some(p._2))
 
   private def asChangeLog(s: SparkSession, dir: String): DataFrame =
     tbl(s, dir, "events").select(
@@ -111,23 +103,12 @@ object CdcQueries {
           log.filter(col("lsn") <= cut1),
           log.filter(col("lsn") > cut1 && col("lsn") <= cut2),
           log.filter(col("lsn") > cut2))
-        // round-6: every epoch's keys+winners materialize in the
-        // background up front, so epoch k+1's narrow scans overlap epoch
-        // k's resolve+write (the replay driver's pipeline, applied to the
-        // lifecycle query itself)
-        val prep = prepareAhead(batches)
-        batches.zipWithIndex.foreach { case (batch, epoch) =>
-          // Catalyst's size estimate (same policy as CdcStream.tail): each
-          // third-of-the-log batch is table-sized, so the merge takes the
-          // full-rewrite path and runs its lineage stats ASYNC instead of
-          // paying the prune path's blocking stats barrier (~1 s/batch
-          // here)
-          val hint = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-          val (pk, win) = handover(prep(epoch))
-          Merge.applyBatch(s, t, batch, epoch.toLong, batchSchemaVersion = 3,
-            batchBytesHint = Some(hint.min(BigInt(Long.MaxValue)).toLong),
-            preparedKeys = pk, preparedWinners = win)
-        }
+        // Catalyst's size estimate (same policy as CdcStream.tail): each
+        // third-of-the-log batch is table-sized, so the merge takes the
+        // full-rewrite path and runs its lineage stats ASYNC instead of
+        // paying the prune path's blocking stats barrier (~1 s/batch
+        // here); epoch k+1's narrow scans overlap epoch k's resolve+write
+        mergeEpochs(s, t, batches, hinted = true)
         log.unpersist()
         t.readUser().select(
           col("url").as("user_key"),
@@ -158,9 +139,8 @@ object CdcQueries {
         val log = asChangeLog(s, dir)
         val t = LakeTable.create(s, fresh(rowLevelDir), schemaId = 3,
           numBuckets = 8)
-        val hint = log.queryExecution.optimizedPlan.stats.sizeInBytes
         Merge.applyBatch(s, t, log, 0L, batchSchemaVersion = 3,
-          batchBytesHint = Some(hint.min(BigInt(Long.MaxValue)).toLong))
+          batchBytesHint = Some(Merge.bytesHint(log)))
         // DELETE FROM t WHERE lang = 'click'
         graft.sql.GraftWrites.applyAndLog(s, t,
           e => graft.sql.GraftWrites.toEvents(t,
@@ -214,22 +194,24 @@ object CdcQueries {
         val t = LakeTable.create(s, fresh(rebaseDir), schemaId = 3,
           numBuckets = 8)
         val rebases0 = LakeTable.commitRebases.get()
-        // both racers' table-independent plans prepared concurrently up
-        // front (the rival's scans overlap the resident's whole pre-commit
-        // phase; semantics unchanged — see prepareAhead)
-        val prep = prepareAhead(Seq(outer, rival))
+        // the rival is the look-ahead batch: its table-independent plans
+        // are prepared while the resident runs its whole pre-commit phase
+        // (semantics unchanged — see mergeEpochs)
+        val rivalPlans = new Prefetch(s).prepare(rival, Merge.bytesHint(rival))
         val noop: () => Unit = () => ()
         Merge.beforeCommitHook = () => {
           Merge.beforeCommitHook = noop // the rival must not re-fire it
-          val (pk, win) = handover(prep(1))
+          val plans = rivalPlans.take()
           Merge.applyBatch(s, t, rival, 1L, batchSchemaVersion = 3,
-            preparedKeys = pk, preparedWinners = win)
+            preparedKeys = plans.map(_._1), preparedWinners = plans.map(_._2))
         }
-        try {
-          val (pk, win) = handover(prep(0))
-          Merge.applyBatch(s, t, outer, 2L, batchSchemaVersion = 3,
-            preparedKeys = pk, preparedWinners = win)
-        } finally Merge.beforeCommitHook = noop
+        try Merge.applyBatch(s, t, outer, 2L, batchSchemaVersion = 3)
+        finally {
+          Merge.beforeCommitHook = noop
+          // a no-op once handed over; frees the rival's plans if the
+          // outer merge failed before its hook fired
+          rivalPlans.release()
+        }
         log.unpersist()
         require(LakeTable.commitRebases.get() > rebases0,
           "cdc_rebase_race: the disjoint race was not salvaged by rebase")
@@ -273,12 +255,7 @@ object CdcQueries {
         // pipelined prep (see cdc_merge_events): on this prune-path query
         // the blocking per-batch stats agg then runs over an
         // already-materialized cached key plan
-        val prep = prepareAhead(batches)
-        batches.zipWithIndex.foreach { case (batch, epoch) =>
-          val (pk, win) = handover(prep(epoch))
-          Merge.applyBatch(s, t, batch, epoch.toLong, batchSchemaVersion = 3,
-            preparedKeys = pk, preparedWinners = win)
-        }
+        mergeEpochs(s, t, batches, hinted = false)
         log.unpersist()
         require(t.currentSnapshot.files.exists(_.delta),
           "cdc_mor_merge: no delta layers — merge-on-read did not engage")
@@ -316,12 +293,7 @@ object CdcQueries {
         t.updateProperties(Map("write-mode" -> "mor"))
         val batches = Seq(log.filter(col("lsn") <= maxLsn / 2),
           log.filter(col("lsn") > maxLsn / 2))
-        val prep = prepareAhead(batches)
-        batches.zipWithIndex.foreach { case (batch, epoch) =>
-          val (pk, win) = handover(prep(epoch))
-          Merge.applyBatch(s, t, batch, epoch.toLong, batchSchemaVersion = 3,
-            preparedKeys = pk, preparedWinners = win)
-        }
+        mergeEpochs(s, t, batches, hinted = false)
         log.unpersist()
         require(t.currentSnapshot.files.exists(_.delta),
           "cdc_mor_narrow: no delta layers — merge-on-read did not engage")
@@ -370,23 +342,13 @@ object CdcQueries {
         val t = LakeTable.create(s, srcDir, schemaId = 3, numBuckets = 8)
         val batches = Seq(log.filter(col("lsn") <= cut),
           log.filter(col("lsn") > cut))
-        // epoch 1's table-independent scans overlap drain 1's whole
-        // streaming micro-batch (see prepareAhead)
-        val prep = prepareAhead(batches)
-        def land(i: Int, epoch: Long): Unit = {
-          val batch = batches(i)
-          val hint = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-          val (pk, win) = handover(prep(i))
-          Merge.applyBatch(s, t, batch, epoch, batchSchemaVersion = 3,
-            batchBytesHint = Some(hint.min(BigInt(Long.MaxValue)).toLong),
-            preparedKeys = pk, preparedWinners = win)
-        }
-        land(0, 0L)
-        graft.cdc.ChangeFeed.replicateStream(s, srcDir, dstDir, ckpt)
-          .awaitTermination() // drain 1: full-snapshot bootstrap
-        land(1, 1L)
-        graft.cdc.ChangeFeed.replicateStream(s, srcDir, dstDir, ckpt)
-          .awaitTermination() // drain 2: incremental delta, same checkpoint
+        // drain after each landing: the first is the full-snapshot
+        // bootstrap, the second the incremental delta on the same
+        // checkpoint. Epoch 1's table-independent scans overlap epoch 0's
+        // merge and drain 1's whole streaming micro-batch.
+        mergeEpochs(s, t, batches, hinted = true, after = _ =>
+          graft.cdc.ChangeFeed.replicateStream(s, srcDir, dstDir, ckpt)
+            .awaitTermination())
         log.unpersist()
         LakeTable.load(s, dstDir).readUser().select(
           col("url").as("user_key"),
@@ -423,14 +385,7 @@ object CdcQueries {
           log.filter(col("lsn") <= cut1),
           log.filter(col("lsn") > cut1 && col("lsn") <= cut2),
           log.filter(col("lsn") > cut2))
-        val prep = prepareAhead(batches)
-        batches.zipWithIndex.foreach { case (batch, epoch) =>
-          val hint = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-          val (pk, win) = handover(prep(epoch))
-          Merge.applyBatch(s, t, batch, epoch.toLong, batchSchemaVersion = 3,
-            batchBytesHint = Some(hint.min(BigInt(Long.MaxValue)).toLong),
-            preparedKeys = pk, preparedWinners = win)
-        }
+        mergeEpochs(s, t, batches, hinted = true)
         log.unpersist()
         t.changesBetweenCdf(2, 3).select(
           col("url").as("user_key"),

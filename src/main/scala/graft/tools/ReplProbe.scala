@@ -46,9 +46,8 @@ object ReplProbe {
       ph("log+maxLsn")
       val t = LakeTable.create(spark, s"$base/src", schemaId = 3, numBuckets = 8)
       def land(batch: DataFrame, epoch: Long): Unit = {
-        val hint = batch.queryExecution.optimizedPlan.stats.sizeInBytes
         Merge.applyBatch(spark, t, batch, epoch, batchSchemaVersion = 3,
-          batchBytesHint = Some(hint.min(BigInt(Long.MaxValue)).toLong))
+          batchBytesHint = Some(Merge.bytesHint(batch)))
       }
       land(log.filter(col("lsn") <= cut), 0L)
       ph("land-0")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.cdc.{CdcStream, Dedup, Merge}
+import graft.cdc.{CdcStream, Dedup, Merge, Prefetch}
 import graft.core.{ChangeGen, TextHtml}
 import graft.lake.LakeTable
 import org.apache.spark.sql.DataFrame
@@ -138,6 +138,28 @@ class CdcEngineSpec extends AnyFunSuite {
       assert(s.applied && s.eventsIn == 15)
       assert(t.readUser().filter(col("url").startsWith("http://auto-"))
         .count() == 15)
+
+      // the CDC queries' feed: Prefetch.inOrder over lsn slices of one
+      // DataFrame, sized by Catalyst. Epoch 0 applies unprepared; the
+      // first prepared epoch has no applied batch to estimate from and
+      // keeps the broadcast default; the second sizes its winners join
+      // from epoch 0's applied key count (> 10) and is shuffled
+      val qt = LakeTable.create(spark, TestSpark.tempDir("table"),
+        schemaId = 3, numBuckets = 8)
+      val slices = Seq(ev.filter(col("lsn") < 3000),
+        ev.filter(col("lsn") >= 3000 && col("lsn") < 6000),
+        ev.filter(col("lsn") >= 6000))
+      val broadcastHints = Seq.newBuilder[Option[Boolean]]
+      val applied = Prefetch.inOrder(spark, slices.zipWithIndex) {
+        case (b, _) => (b, Merge.bytesHint(b))
+      } { case ((_, epoch), b) =>
+        broadcastHints += b.winners.map(hasBroadcastHint)
+        Merge.applyBatch(spark, qt, b.df, epoch.toLong, batchSchemaVersion = 3,
+          batchBytesHint = Some(b.bytes), preparedKeys = b.keys,
+          preparedWinners = b.winners)
+      }
+      assert(applied.forall(_.applied))
+      assert(broadcastHints.result() == Seq(None, Some(true), Some(false)))
     } finally spark.conf.unset("graft.merge.broadcastWinnersMaxKeys")
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.cdc.{CdcStream, Merge}
+import graft.cdc.{CdcStream, Merge, Prefetch}
 import graft.core.ChangeGen
 import graft.lake.LakeTable
 import org.apache.spark.sql.functions._
@@ -106,10 +106,15 @@ class StreamSpec extends AnyFunSuite {
       gateKey = CdcStream.gateKeyFor(ckB))
     assert(direct.applied)
 
-    // …restart: the stream re-delivers epoch 3; the gate must skip it
+    // …restart: the stream re-delivers epoch 3; the gate must skip it.
+    // The resumed checkpoint makes no pre-start prediction, so no
+    // prefetch is wasted on a mispredicted file set
     chunks.drop(3).foreach(c => copyChunk(c, logB))
+    val misses0 = Prefetch.misses.get()
     CdcStream.tailAll(spark, logB, dirB, ckB)
     assert(tB.currentVersion == 8, "duplicate epoch was applied twice")
+    assert(Prefetch.misses.get() == misses0,
+      "the resumed tail discarded a mispredicted prefetch")
 
     // identical snapshot chains, byte-identical content at every version
     assert(fingerprint(tB) == fingerprint(tA))
