@@ -4,8 +4,7 @@ import graft.core.{SchemaRegistry, Schemas}
 import graft.lake.{DataFile, LakeTable, Snapshot}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
 
 /** Lineage emitted per applied batch (north star: per-partition source LSN
   * range, rows applied, conflict count).
@@ -667,13 +666,15 @@ object Merge {
     }
     // footer reads are driver-side IO — done concurrently, they'd otherwise
     // add O(numBuckets × open-latency) of fixed serial time per batch
+    val conf = SparkSession.active.sparkContext.hadoopConfiguration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(16, math.max(1, paths.size)))
     try {
       val futs = paths.map { case (p, b) =>
         pool.submit(new java.util.concurrent.Callable[DataFile] {
           def call(): DataFile = {
-            val (rows, ts) = footerMeta(p)
+            val (rows, ts) = ParquetRowCodec.footerMeta(
+              new org.apache.hadoop.fs.Path(p.toUri), conf)
             DataFile(p.toString, b, rows, Files.size(p), schemaId,
               ts.map(_._1), ts.map(_._2), delta = delta)
           }
@@ -681,37 +682,5 @@ object Merge {
       }
       futs.map(_.get())
     } finally pool.shutdown()
-  }
-
-  /** Row count + warc_ts [min, max] (epoch micros) from the parquet
-    * footer — metadata only, no data scan. The ts zone map feeds
-    * [[graft.lake.GraftFileIndex]] scan pruning; it is None unless EVERY
-    * row group has INT64 min/max stats (Spark's default INT96 timestamps
-    * carry none — applyBatch pins the writer to TIMESTAMP_MICROS, see
-    * there), so a partial-stats file is kept, never mis-pruned.
-    */
-  private def footerMeta(p: Path): (Long, Option[(Long, Long)]) = {
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toUri), new Configuration())
-    val r = ParquetFileReader.open(in)
-    try {
-      val blocks = r.getFooter.getBlocks.asScala
-      val ranges = blocks.map { b =>
-        b.getColumns.asScala.find(_.getPath.toDotString == "warc_ts")
-          .filter(_.getPrimitiveType.getPrimitiveTypeName ==
-            org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64)
-          .map(_.getStatistics)
-          .filter(s => s != null && !s.isEmpty && s.hasNonNullValue)
-          .map(s => (s.genericGetMin.asInstanceOf[java.lang.Long].longValue,
-            s.genericGetMax.asInstanceOf[java.lang.Long].longValue))
-      }
-      val ts =
-        if (ranges.isEmpty || ranges.exists(_.isEmpty)) None
-        else Some((ranges.flatten.map(_._1).min, ranges.flatten.map(_._2).max))
-      (r.getRecordCount, ts)
-    } finally r.close()
   }
 }

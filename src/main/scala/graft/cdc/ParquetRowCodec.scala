@@ -1,12 +1,15 @@
 package graft.cdc
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader, ParquetWriter}
 import org.apache.parquet.io.api.{
   Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
@@ -43,9 +46,10 @@ private[graft] object ParquetRowCodec {
     * (`spark.hadoop.*`: FS impls, credentials) AND, in client mode,
     * whatever only the driver's HADOOP_CONF_DIR site XMLs carry
     * (review r5, twice: a driver-relative delta was still wrong when
-    * executor containers lack the driver's XMLs). Values are read
+    * executor containers lack the driver's XMLs). Every key the driver
+    * resolves is shipped, classpath defaults included, with values read
     * expanded via get(). This is Spark's own SerializableConfiguration
-    * pattern re-expressed without the private[spark] class; the factory
+    * contract re-expressed without the private[spark] class; the factory
     * holding it serializes once per stage (task binaries are broadcast),
     * so the ~tens-of-KB payload is per-stage, not per-task.
     */
@@ -56,12 +60,14 @@ private[graft] object ParquetRowCodec {
       .toSeq
   }
 
-  /** Executor side: the driver's effective conf, rebuilt. Entries are
-    * applied over a classpath default (quiet on executors that DO have
-    * the site XMLs — same values win).
+  /** Executor side: the driver's full effective conf, rebuilt WITHOUT
+    * classpath defaults — `new Configuration(false)`. The pairs already
+    * hold every default the driver loaded, so re-parsing core-default.xml
+    * and core-site.xml here would only re-derive them, at a cost that
+    * dwarfs the bucket read itself.
     */
   def confFrom(delta: Seq[(String, String)]): Configuration = {
-    val c = new Configuration()
+    val c = new Configuration(false)
     delta.foreach { case (k, v) => c.set(k, v) }
     c
   }
@@ -233,10 +239,51 @@ private[graft] object ParquetRowCodec {
     }
   }
 
+  /** Opens `path` over `conf` as given. Not `ParquetReader.builder(rs,
+    * Path)`: that entry point builds (and reads options from) a fresh
+    * `new Configuration()` before `withConf` replaces it, re-parsing the
+    * Hadoop XML defaults on every file — far slower than reading a
+    * bucket-sized file. The `InputFile` builder takes its conf and
+    * options from the `HadoopInputFile` alone.
+    */
   def openReader(path: String, target: StructType,
       conf: Configuration): ParquetReader[Array[Any]] =
-    ParquetReader.builder(new RowReadSupport(target),
-      new org.apache.hadoop.fs.Path(path)).withConf(conf).build()
+    new ParquetReader.Builder[Array[Any]](
+        HadoopInputFile.fromPath(new Path(path), conf)) {
+      override protected def getReadSupport: ReadSupport[Array[Any]] =
+        new RowReadSupport(target)
+    }.build()
+
+  /** Row count + warc_ts [min, max] (epoch micros) from the parquet
+    * footer — metadata only, no data scan. The ts zone map feeds
+    * [[graft.lake.GraftFileIndex]] scan pruning; it is None unless EVERY
+    * row group has INT64 min/max stats (Spark's default INT96 timestamps
+    * carry none — Merge.applyBatch pins the writer to TIMESTAMP_MICROS),
+    * so a partial-stats file is kept, never mis-pruned. Options come from
+    * `conf` via `HadoopReadOptions`: `ParquetFileReader.open(InputFile)`
+    * would build its default options over a fresh `new Configuration()`,
+    * re-parsing the XML defaults for every file a commit writes.
+    */
+  def footerMeta(path: Path, conf: Configuration)
+      : (Long, Option[(Long, Long)]) = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      HadoopReadOptions.builder(conf, path).build())
+    try {
+      val ranges = r.getFooter.getBlocks.asScala.map { b =>
+        b.getColumns.asScala.find(_.getPath.toDotString == "warc_ts")
+          .filter(_.getPrimitiveType.getPrimitiveTypeName ==
+            PrimitiveTypeName.INT64)
+          .map(_.getStatistics)
+          .filter(s => s != null && !s.isEmpty && s.hasNonNullValue)
+          .map(s => (s.genericGetMin.asInstanceOf[java.lang.Long].longValue,
+            s.genericGetMax.asInstanceOf[java.lang.Long].longValue))
+      }
+      val ts =
+        if (ranges.isEmpty || ranges.exists(_.isEmpty)) None
+        else Some((ranges.flatten.map(_._1).min, ranges.flatten.map(_._2).max))
+      (r.getRecordCount, ts)
+    } finally r.close()
+  }
 
   // ---------- write side (sink staging) ----------
 
@@ -276,7 +323,7 @@ private[graft] object ParquetRowCodec {
 
   def openWriter(path: String, mt: MessageType,
       conf: Configuration): ParquetWriter[Group] =
-    ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(path))
+    ExampleParquetWriter.builder(new Path(path))
       .withConf(conf).withType(mt)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()

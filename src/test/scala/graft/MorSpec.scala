@@ -1,12 +1,13 @@
 package graft
 
-import graft.cdc.{ChangeFeed, Merge}
+import graft.cdc.{ChangeFeed, Merge, ParquetRowCodec}
 import graft.core.ChangeGen
 import graft.lake.{LakeTable, Maintenance}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Merge-on-read write mode (`write-mode = mor`): batches append
   * per-bucket DELTA layers instead of rewriting touched buckets;
@@ -43,6 +44,26 @@ class MorSpec extends AnyFunSuite {
     val per = math.max(1L, ev.count() / n)
     (0 until n).map(i => ev.filter(
       col("lsn") >= i * per && (col("lsn") < (i + 1) * per || lit(i == n - 1))))
+  }
+
+  test("bucket readers rebuild the driver's effective Hadoop conf key for " +
+      "key, session-only keys included, without loading XML defaults") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    val key = "graft.test.session-only"
+    val prior = Option(hc.getRaw(key))
+    hc.set(key, "shipped")
+    try {
+      val c = ParquetRowCodec.confFrom(ParquetRowCodec.hadoopConfDelta(spark))
+      def effective(conf: org.apache.hadoop.conf.Configuration) =
+        conf.asScala.flatMap(e =>
+          Option(conf.get(e.getKey)).map(e.getKey -> _)).toMap
+      assert(effective(c) == effective(hc))
+      assert(c.get(key) == "shipped")
+      assert(!c.toString.contains(".xml"), c.toString)
+    } finally prior match {
+      case Some(v) => hc.set(key, v)
+      case None => hc.unset(key)
+    }
   }
 
   test("MoR content equals the CoW twin across epochs; commits append " +
